@@ -81,7 +81,7 @@ object Bench {
         try SparkEntry.queries(name)(spark, sfDir).count()
         catch { case _: Throwable => }
         finally {
-          graft.operators.Dedup.retireCaches()
+          graft.operators.Kernels.retireCaches()
           System.gc() // same session hygiene as the timed loop
         }
       }
@@ -139,7 +139,7 @@ object Bench {
       } finally {
         // dedup builders pin SF-sized caches that must not outlive their
         // query's action — leaking them taxed the whole bench tail 2-4x
-        graft.operators.Dedup.retireCaches()
+        graft.operators.Kernels.retireCaches()
         // ContextCleaner only reaps dead broadcast/shuffle state on
         // driver GC, and a 32 GB heap may never GC in a whole run; the
         // accumulated dead blocks squeeze execution memory and measured

@@ -23,7 +23,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally {
-        graft.operators.Dedup.retireCaches() // see Bench
+        graft.operators.Kernels.retireCaches() // see Bench
         System.gc() // let ContextCleaner reap dead broadcast/shuffle state
       }
     }

@@ -30,23 +30,13 @@ object Dedup {
   // returned DataFrame is lazy — the cache must survive until the
   // caller's action). Contract PER THREAD (the registry is
   // thread-scoped, see [[Kernels]]): BUILD one dedup pipeline, EXECUTE
-  // its action, then call [[retireCaches]] (Bench/Verify do) — or
+  // its action, then call [[Kernels.retireCaches]] (Bench/Verify do) — or
   // simply build the next dedup on the same thread, which retires the
   // previous generation as a fallback. Building two dedup pipelines on
   // one thread before running either silently drops the first's caches
   // (correct but slow: Spark recomputes); concurrent queries on
   // separate threads are isolated.
   private def cacheTracked(df: DataFrame): DataFrame = Kernels.cacheTracked(df)
-
-  /** Unpersist every cache the calling thread's last builder pinned
-    * (thread-scoped registry shared with other operators via
-    * [[Kernels.retireCaches]]). Call after the consuming action
-    * completes; otherwise the (SF-sized) exploded shingle frames stay
-    * pinned in storage memory for the rest of the session and tax
-    * every later query (measured 2-4x on the bench tail in round 2).
-    */
-  def retireCaches(): Unit = Kernels.retireCaches()
-  private def retirePreviousCaches(): Unit = retireCaches()
 
   /** Distinct word n-gram shingles of a token array; a doc shorter than
     * n tokens contributes its whole text as one shingle.
@@ -207,7 +197,7 @@ object Dedup {
     */
   def incrementalBloom(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.BloomFunctions
-    retirePreviousCaches()
+    Kernels.retireCaches()
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"),
         md5(TextAnalysis.normalizedText(col("text"))).as("fp"),
@@ -331,13 +321,13 @@ object Dedup {
   private def ngramPairs(spark: SparkSession, dir: String): DataFrame =
     pairsMemo.synchronized {
       pairsMemo.getOrElseUpdate(Kernels.inputKey(dir, "documents.parquet"),
-        { val out = buildNgramPairs(spark, dir).localCheckpoint(); retireCaches(); out })
+        { val out = buildNgramPairs(spark, dir).localCheckpoint(); Kernels.retireCaches(); out })
     }
 
   // package-private so the plan audit inspects the BUILDER's join plan
   // (the public query serves the materialized checkpoint once built)
   private[graft] def buildNgramPairs(spark: SparkSession, dir: String): DataFrame = {
-    retirePreviousCaches()
+    Kernels.retireCaches()
     // cached: feeds the df-agg + prefix build AND the verify join sides
     val shArr = cacheTracked(docShingles(spark, dir))
     val ex = shArr.select(col("doc_id"), explode(col("sh")).as("s"))
@@ -427,7 +417,7 @@ object Dedup {
         // the checkpoint is the materializing action: the loop's own
         // caches are dead weight from here on — free them immediately
         // instead of waiting for the caller's retirement
-        retireCaches()
+        Kernels.retireCaches()
         labels
       })
     }
@@ -620,7 +610,7 @@ object Dedup {
     // materialized + lineage-cut: the base state is an input to the
     // merge, not part of its plan (production reads it from parquet)
     val histLabels = clustersFromEdges(histDocs, histEdges).localCheckpoint()
-    retireCaches() // the history component loop's caches are dead now
+    Kernels.retireCaches() // the history component loop's caches are dead now
     val batchDocs = docs.filter(isIncBatch(col("doc_id")))
     val batchEdges = edges.filter(isIncBatch(col("doc_a")) || isIncBatch(col("doc_b")))
     (histLabels, batchDocs, batchEdges)
@@ -969,7 +959,7 @@ object Dedup {
   }
 
   def minHashLsh(spark: SparkSession, dir: String): DataFrame = {
-    retirePreviousCaches()
+    Kernels.retireCaches()
     // shArr and bands each feed two join sides; cache so the shingle +
     // signature pipeline runs once, not four times (4x wall measured)
     val shArr = cacheTracked(docShingles(spark, dir))
@@ -1003,7 +993,7 @@ object Dedup {
     * the store is already deduplicated by construction.
     */
   def incrementalMinHash(spark: SparkSession, dir: String): DataFrame = {
-    retirePreviousCaches()
+    Kernels.retireCaches()
     val shArr = cacheTracked(docShingles(spark, dir))
     val split = substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
     val bands = cacheTracked(minHashBands(minHashSignatureKernel(shArr))
@@ -1097,7 +1087,7 @@ object Dedup {
     * snapshot-projection contract at [[graft.operators.Graph.knnMaintain]]),
     * so `sub` boundaries must reflect the batch-inclusive snapshot for
     * the untouched-cell carry-over to stay valid. Session memos cannot
-    * amortize this across gate queries ([[retireCaches]] kills them
+    * amortize this across gate queries ([[Kernels.retireCaches]] kills them
     * per query); only the disk store does.
     */
   private[graft] def ensureCelledIndexStore(spark: SparkSession, dir: String): String =
@@ -1417,7 +1407,7 @@ object Dedup {
     */
   def embeddingNearDupLsh(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.dot
-    retirePreviousCaches()
+    Kernels.retireCaches()
     val emb = cacheTracked(
       Kernels.fanOut(
         Tables.embeddings(spark, dir)
@@ -1484,7 +1474,7 @@ object Dedup {
     * key, not a different algorithm.
     */
   def simHashPairs(spark: SparkSession, dir: String): DataFrame = {
-    retirePreviousCaches()
+    Kernels.retireCaches()
     val bands = simHashBandRows(spark, dir, withSplit = false)
     val hamming = (bit_count(col("x.h1").bitwiseXOR(col("y.h1")))
       + bit_count(col("x.h2").bitwiseXOR(col("y.h2")))).cast("long")
@@ -1536,7 +1526,7 @@ object Dedup {
     * history-history pairs are never generated.
     */
   def incrementalSimHash(spark: SparkSession, dir: String): DataFrame = {
-    retirePreviousCaches()
+    Kernels.retireCaches()
     val bands = simHashBandRows(spark, dir, withSplit = true)
     val hamming = (bit_count(col("x.h1").bitwiseXOR(col("y.h1")))
       + bit_count(col("x.h2").bitwiseXOR(col("y.h2")))).cast("long")

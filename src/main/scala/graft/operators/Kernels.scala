@@ -32,7 +32,7 @@ private[graft] object Kernels {
   // building the base state and the merge; with a global registry that
   // drop would unpersist a concurrently-running query's pinned frames.
   // Contract per scope unchanged: BUILD one pipeline, EXECUTE its
-  // action, then retire (Bench/Verify call Dedup.retireCaches after
+  // action, then retire (Bench/Verify call retireCaches after
   // every query).
   private final class Scope {
     val caches =

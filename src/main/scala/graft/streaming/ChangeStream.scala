@@ -13,8 +13,8 @@ import graft.operators.Relational
   * does not re-merge the whole change log nightly; it applies each
   * arriving batch of change events to the maintained table as it
   * lands. Same harness contract as [[EventStream]]: file-stream source
-  * over the static parquet, drained via `processAllAvailable` for the
-  * oracle gate only.
+  * over the static parquet, drained through [[Drain]] for the oracle
+  * gate only.
   */
 object ChangeStream {
 
@@ -86,27 +86,21 @@ object ChangeStream {
     val changes = Relational.cdcChangeLog(
       spark.readStream.schema(ordersSchema)
         .option("pathGlobFilter", "orders.parquet").parquet(dir))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8") // batch-sized exchanges, see EventStream
-    try {
-      val q = changes.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // the new store materializes eagerly FROM the old one, so the
-          // previous batch's checkpoint blocks can be freed right after
-          // (unpersist is a no-op on checkpoints — free by RDD id).
-          // Plain localCheckpoint here: foreachBatch runs on the
-          // stream-execution thread, and the tracked-cache registry is
-          // scoped per thread — the QUERY thread adopts the final
-          // store below so its retireCaches frees it.
-          val prevId = graft.operators.Kernels.checkpointRddId(target)
-          target = mergeBatch(target, batch).localCheckpoint()
-          prevId.foreach(graft.operators.Kernels
-            .releaseCheckpoint(spark.sparkContext, _))
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Drain.withStatePartitions(spark) {
+      Drain.foreachBatch(changes) { (batch, _) =>
+        // the new store materializes eagerly FROM the old one, so the
+        // previous batch's checkpoint blocks can be freed right after
+        // (unpersist is a no-op on checkpoints — free by RDD id).
+        // Plain localCheckpoint here: foreachBatch runs on the
+        // stream-execution thread, and the tracked-cache registry is
+        // scoped per thread — the QUERY thread adopts the final
+        // store below so its retireCaches frees it.
+        val prevId = graft.operators.Kernels.checkpointRddId(target)
+        target = mergeBatch(target, batch).localCheckpoint()
+        prevId.foreach(graft.operators.Kernels
+          .releaseCheckpoint(spark.sparkContext, _))
+      }
+    }
     finish(graft.operators.Kernels.adoptCheckpoint(target))
   }
 }

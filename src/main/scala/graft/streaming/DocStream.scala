@@ -10,7 +10,7 @@ import graft.operators.TextAnalysis
 /** Streaming document-ingest operators (north star — the reference is
   * strictly batch, SURVEY.md §2.5). Same harness contract as
   * [[EventStream]]: file-stream source over the static parquet, memory
-  * sink + `processAllAvailable` drain for the oracle gate only.
+  * sink + [[Drain]] for the oracle gate only.
   */
 object DocStream {
 
@@ -40,15 +40,9 @@ object DocStream {
       .parquet(dir)
       .select(md5(TextAnalysis.normalizedText(col("text"))).as("fp"))
       .dropDuplicates("fp")
-    val name = "stream_dedup_out"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8") // state stores sized to keys, see EventStream
-    try {
-      val q = fps.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name).orderBy("fp")
+    Drain.withStatePartitions(spark) {
+      Drain.toMemory(fps, OutputMode.Append(), "stream_dedup_out")
+    }.orderBy("fp")
   }
 
   /** Synthetic event time spanning [[WatermarkSpanSecs]] seconds — the
@@ -88,15 +82,9 @@ object DocStream {
       .withWatermark("ts", WatermarkDelay)
       .dropDuplicatesWithinWatermark("fp")
       .select("fp")
-    val name = "stream_dedup_wm_out"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8") // state stores sized to keys, see EventStream
-    try {
-      val q = fps.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name).orderBy("fp")
+    Drain.withStatePartitions(spark) {
+      Drain.toMemory(fps, OutputMode.Append(), "stream_dedup_wm_out")
+    }.orderBy("fp")
   }
 
   /** Streaming incremental dedup — [[graft.operators.Dedup.incremental]]
@@ -132,15 +120,9 @@ object DocStream {
       .groupBy("fp")
       .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_batch_dups"))
       .select(col("doc_id"), col("fp"), col("n_batch_dups"))
-    val name = "stream_inc_dedup_out"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8") // state stores sized to keys, see EventStream
-    try {
-      val q = deduped.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name).orderBy("doc_id")
+    Drain.withStatePartitions(spark) {
+      Drain.toMemory(deduped, OutputMode.Complete(), "stream_inc_dedup_out")
+    }.orderBy("doc_id")
   }
 
   /** `stream_dedup_spans`: the INGEST-stream twin of
@@ -204,13 +186,9 @@ object DocStream {
         concat_ws(",", transform(
           sort_array(collect_list(when(col("hit"), col("s")))),
           x => x.cast("string"))).as("dup_starts"))
-    val name = "stream_dedup_spans_out"
-    EventStream.withStatePartitions(spark) {
-      val q = report.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("doc_id")
+    Drain.withStatePartitions(spark) {
+      Drain.toMemory(report, OutputMode.Complete(), "stream_dedup_spans_out")
+    }.orderBy("doc_id")
   }
 
   private val embeddingsSchema = StructType(Seq(
@@ -314,15 +292,13 @@ object DocStream {
       // dependent on the pair, so min() is just the value
       .groupBy("batch_id", "hist_id")
       .agg(min("jaccard").as("jaccard"))
-    val name = "stream_inc_minhash_out"
     val prevSmj = spark.conf.get("spark.sql.join.preferSortMergeJoin")
     spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    try EventStream.withStatePartitions(spark) {
-      val q = pairs.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally { q.stop(); Dedup.retireCaches() }
+    val sink = try Drain.withStatePartitions(spark) {
+      try Drain.toMemory(pairs, OutputMode.Complete(), "stream_inc_minhash_out")
+      finally Kernels.retireCaches()
     } finally spark.conf.set("spark.sql.join.preferSortMergeJoin", prevSmj)
-    spark.table(name).orderBy("batch_id", "hist_id")
+    sink.orderBy("batch_id", "hist_id")
   }
 
   /** `stream_incremental_semantic`: the INGEST-stream twin of
@@ -368,11 +344,10 @@ object DocStream {
         round(dot(spark, col("bv"), col("hv")) / (col("bn") * col("hn")), 6)
           .as("cosine"))
       .filter(col("cosine") >= Dedup.CosineDupThreshold)
-    val name = "stream_inc_semantic_out"
-    val q = pairs.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally { q.stop(); Dedup.retireCaches() }
-    spark.table(name).orderBy("batch_id", "hist_id")
+    val sink =
+      try Drain.toMemory(pairs, OutputMode.Append(), "stream_inc_semantic_out")
+      finally Kernels.retireCaches()
+    sink.orderBy("batch_id", "hist_id")
   }
 
   /** `stream_phash_incremental`: the ingest-stream twin of
@@ -420,13 +395,10 @@ object DocStream {
       .filter(col("hamming") <= Multimodal.PhashMaxHamming)
       .groupBy("batch_id", "hist_id")
       .agg(min("hamming").as("hamming"))
-    val name = "stream_phash_out"
-    EventStream.withStatePartitions(spark) {
-      val q = pairs.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally { q.stop(); Dedup.retireCaches() }
-    }
-    spark.table(name).orderBy("batch_id", "hist_id")
+    Drain.withStatePartitions(spark) {
+      try Drain.toMemory(pairs, OutputMode.Complete(), "stream_phash_out")
+      finally Kernels.retireCaches()
+    }.orderBy("batch_id", "hist_id")
   }
 
   /** `stream_audio_neardup`: the ingest-stream twin of
@@ -475,13 +447,10 @@ object DocStream {
       .filter(col("hamming") <= Multimodal.PhashMaxHamming)
       .groupBy("batch_id", "hist_id")
       .agg(min("hamming").as("hamming"))
-    val name = "stream_audio_neardup_out"
-    EventStream.withStatePartitions(spark) {
-      val q = pairs.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally { q.stop(); Dedup.retireCaches() }
-    }
-    spark.table(name).orderBy("batch_id", "hist_id")
+    Drain.withStatePartitions(spark) {
+      try Drain.toMemory(pairs, OutputMode.Complete(), "stream_audio_neardup_out")
+      finally Kernels.retireCaches()
+    }.orderBy("batch_id", "hist_id")
   }
 
   /** `stream_video_neardup`: the ingest-stream twin of
@@ -533,13 +502,10 @@ object DocStream {
       .groupBy("batch_id", "hist_id")
       .agg(count(lit(1)).as("n_frame_matches"), min("hamming").as("min_hamming"))
       .filter(col("n_frame_matches") >= Multimodal.VideoMatchMinFrames)
-    val name = "stream_video_neardup_out"
-    EventStream.withStatePartitions(spark) {
-      val q = pairs.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally { q.stop(); Dedup.retireCaches() }
-    }
-    spark.table(name).orderBy("batch_id", "hist_id")
+    Drain.withStatePartitions(spark) {
+      try Drain.toMemory(pairs, OutputMode.Complete(), "stream_video_neardup_out")
+      finally Kernels.retireCaches()
+    }.orderBy("batch_id", "hist_id")
   }
 
   /** STREAMING FLAGSHIP — [[graft.operators.Corpus.ingest]] run as a
@@ -639,15 +605,9 @@ object DocStream {
         min("quality").as("quality"))
       .select("doc_id", "fp", "n_batch_dups", "quality")
 
-    val name = "stream_pipeline_ingest_out"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8") // state stores sized to keys, see EventStream
-    try {
-      val q = result.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name).orderBy("doc_id")
+    Drain.withStatePartitions(spark) {
+      Drain.toMemory(result, OutputMode.Complete(), "stream_pipeline_ingest_out")
+    }.orderBy("doc_id")
   }
 
   val QualityThreshold = 0.5
@@ -683,11 +643,7 @@ object DocStream {
 
   def streamQuality(spark: SparkSession, dir: String): DataFrame = {
     val scored = qualityStreamFrame(spark, dir)
-    val name = "stream_quality_out"
-    val q = scored.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).orderBy("doc_id")
+    Drain.toMemory(scored, OutputMode.Append(), "stream_quality_out").orderBy("doc_id")
   }
 
   /** `stream_quality_classifier`: the TRAINED quality head applied on
@@ -712,11 +668,8 @@ object DocStream {
       .parquet(dir)
     val scored = QualityClassifier.scoreFrame(
       QualityClassifier.featuresOf(stream), head)
-    val name = "stream_quality_classifier_out"
-    val q = scored.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).orderBy("doc_id")
+    Drain.toMemory(scored, OutputMode.Append(), "stream_quality_classifier_out")
+      .orderBy("doc_id")
   }
 
   /** `stream_bm25_index`: the search index MAINTAINED under
@@ -766,17 +719,12 @@ object DocStream {
   private def ingestSearchStore(spark: SparkSession, dir: String): java.nio.file.Path = {
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-index")
     val tmpPath = tmp.toString
-    val q = spark.readStream
+    val docs = spark.readStream
       .schema(documentsSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
       .select(col("doc_id"), col("text"))
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendSearchBatch(batch, tmpPath)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    Drain.foreachBatch(docs) { (batch, _) => appendSearchBatch(batch, tmpPath) }
     tmp
   }
 
@@ -913,18 +861,15 @@ object DocStream {
     try {
       val splitOf =
         substring(md5(concat(lit("inc:"), col("vec_id").cast("string"))), 1, 1)
-      val q = spark.readStream
+      val vecs = spark.readStream
         .schema(embeddingsSchema)
         .option("pathGlobFilter", "embeddings.parquet")
         .parquet(dir)
         .select(col("vec_id"), col("embedding"))
         .filter(splitOf < Dedup.IncBatchThreshold)
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          ProductQuant.appendBatchToIndex(batch, base, delta)
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      Drain.foreachBatch(vecs) { (batch, _) =>
+        ProductQuant.appendBatchToIndex(batch, base, delta)
+      }
       graft.operators.Kernels.trackedCheckpoint(
         ProductQuant.annIvfPqFromLayers(spark, dir, base, delta))
     } finally graft.operators.Kernels.rmTree(tmp.toFile)
@@ -959,32 +904,28 @@ object DocStream {
         .write.parquet(s"$tmp/keep_v0")
       // Atomic, not a plain local var: the counter is written on the
       // stream-execution thread (inside foreachBatch) and read on the
-      // caller thread after processAllAvailable() — a captured plain
+      // caller thread after the drain returns — a captured plain
       // var rides an unsynchronized ObjectRef, leaving visibility to
       // incidental locking inside the streaming engine
       val version = new java.util.concurrent.atomic.AtomicInteger(0)
       val splitOf =
         substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
       val synth = udf((body: Array[Byte]) => Multimodal.synthPayload(body))
-      val q = spark.readStream
+      val payloads = spark.readStream
         .schema(documentsSchema)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(dir)
         .select(col("doc_id"), col("text"), splitOf.as("split"))
         .filter(col("split") < Dedup.IncBatchThreshold)
         .select(col("doc_id"), synth(encode(col("text"), "UTF-8")).as("payload"))
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val v = version.get()
-          val sigs = Multimodal.mediaSigFrame(batch, imgMu, audMu, vidMu)
-          Multimodal.mergeMediaKeep(
-              spark.read.parquet(s"$tmp/keep_v$v"), sigs)
-            .write.parquet(s"$tmp/keep_v${v + 1}")
-          version.incrementAndGet()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      Drain.foreachBatch(payloads) { (batch, _) =>
+        val v = version.get()
+        val sigs = Multimodal.mediaSigFrame(batch, imgMu, audMu, vidMu)
+        Multimodal.mergeMediaKeep(
+            spark.read.parquet(s"$tmp/keep_v$v"), sigs)
+          .write.parquet(s"$tmp/keep_v${v + 1}")
+        version.incrementAndGet()
+      }
       Kernels.trackedCheckpoint(
         spark.read.parquet(s"$tmp/keep_v${version.get()}")
           .orderBy("modality", "keep_id"))
@@ -1107,10 +1048,10 @@ object DocStream {
       // partial output and folds once. Visibility: the CopyOnWrite
       // list covers labelsAt()'s cross-thread reads of `processed`;
       // the caller-thread reads of the plain keep MAPS at drain rest
-      // on q.processAllAvailable()'s own lock (its await establishes
-      // the happens-before with the stream thread's batch bodies) —
-      // replacing processAllAvailable with status polling would need
-      // an explicit fence for the maps.
+      // on the lock of [[Drain]]'s wait (its await establishes the
+      // happens-before with the stream thread's batch bodies) —
+      // replacing that wait with status polling would need an
+      // explicit fence for the maps.
       val processed = new java.util.concurrent.CopyOnWriteArrayList[Long]()
       // bids whose deferred contraction has been folded into a labels
       // file, newest last — per-batch edge/sig writes accumulate
@@ -1172,72 +1113,68 @@ object DocStream {
       val prevSmj = spark.conf.get("spark.sql.join.preferSortMergeJoin")
       spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
       try {
-        val q = reader
+        val payloads = reader
           .parquet(srcDir)
           .select(col("doc_id"), col("text"), splitOf.as("split"))
           .filter(col("split") < Dedup.IncBatchThreshold)
           .select(col("doc_id"), synth(encode(col("text"), "UTF-8")).as("payload"))
-          .writeStream.outputMode(OutputMode.Append())
-          .foreachBatch { (batch: DataFrame, bid: Long) =>
-            if (!processed.isEmpty && processed.get(processed.size - 1) >= bid) {
-              // replayed, fully-committed batch — skip (idempotence)
-            } else {
-              // per-sig aggregates collected first (bounded by the
-              // batch's present sigs) so the driver fold is a pure
-              // in-memory step AFTER every Spark job has succeeded
-              val imgAgg = Multimodal.sigBatchAgg(
-                Multimodal.phashSigFrame(batch, imgMu, "doc_id", "ph"))
-              val audAgg = Multimodal.sigBatchAgg(
-                Multimodal.audioSigFrame(batch, audMu))
-              // the batch's frame sigs feed three consumers (two probe
-              // sides, the store write) — checkpoint so the decode
-              // kernel runs once per batch
-              val vidS = (Multimodal.frameSigFrame(batch, vidMu,
-                "doc_id", "sample_no", "ph").localCheckpoint())
-              // per-batch work stops at EDGES: the blast-radius probe
-              // (batch frames x accumulated store, banded — work
-              // proportional to the batch) plus within-batch pairs,
-              // written keyed by bid. The label contraction defers —
-              // see [[VideoContractEvery]].
-              (Multimodal.videoClipPairsProbe(vidS, vidSigsAt())
-                .select("doc_a", "doc_b")
-                .unionByName(Multimodal.videoClipPairs(vidS)
-                  .select("doc_a", "doc_b"))
-                .write.mode("overwrite").parquet(s"$tmp/edges_b$bid"))
-              (vidS.write.mode("overwrite").parquet(s"$tmp/vidsigs_b$bid"))
-              // the batch's checkpoint blocks are dead once the writes
-              // are done — free them per batch instead of leaving one
-              // node-sized block PER MICRO-BATCH to the ContextCleaner
-              // (which only runs on driver GC)
-              Kernels.checkpointRddId(vidS).foreach { id =>
-                spark.sparkContext.getPersistentRDDs.get(id)
-                  .foreach(_.unpersist(true))
-              }
-              // driver state LAST — pure in-memory, cannot fail midway
-              Multimodal.sigKeepFold(imgKeep, imgAgg)
-              Multimodal.sigKeepFold(audKeep, audAgg)
-              processed.add(bid)
-              // deferred contraction: fold accumulated edges into the
-              // label table once enough batches are pending (a replayed
-              // batch that died between the labels write and the
-              // `contracted` append simply re-contracts at the next
-              // point — confluent, and the write is keyed + overwrite)
-              if (pendingBids().size >= contractEvery) contract(bid)
+        Drain.foreachBatch(payloads) { (batch, bid) =>
+          if (!processed.isEmpty && processed.get(processed.size - 1) >= bid) {
+            // replayed, fully-committed batch — skip (idempotence)
+          } else {
+            // per-sig aggregates collected first (bounded by the
+            // batch's present sigs) so the driver fold is a pure
+            // in-memory step AFTER every Spark job has succeeded
+            val imgAgg = Multimodal.sigBatchAgg(
+              Multimodal.phashSigFrame(batch, imgMu, "doc_id", "ph"))
+            val audAgg = Multimodal.sigBatchAgg(
+              Multimodal.audioSigFrame(batch, audMu))
+            // the batch's frame sigs feed three consumers (two probe
+            // sides, the store write) — checkpoint so the decode
+            // kernel runs once per batch
+            val vidS = (Multimodal.frameSigFrame(batch, vidMu,
+              "doc_id", "sample_no", "ph").localCheckpoint())
+            // per-batch work stops at EDGES: the blast-radius probe
+            // (batch frames x accumulated store, banded — work
+            // proportional to the batch) plus within-batch pairs,
+            // written keyed by bid. The label contraction defers —
+            // see [[VideoContractEvery]].
+            (Multimodal.videoClipPairsProbe(vidS, vidSigsAt())
+              .select("doc_a", "doc_b")
+              .unionByName(Multimodal.videoClipPairs(vidS)
+                .select("doc_a", "doc_b"))
+              .write.mode("overwrite").parquet(s"$tmp/edges_b$bid"))
+            (vidS.write.mode("overwrite").parquet(s"$tmp/vidsigs_b$bid"))
+            // the batch's checkpoint blocks are dead once the writes
+            // are done — free them per batch instead of leaving one
+            // node-sized block PER MICRO-BATCH to the ContextCleaner
+            // (which only runs on driver GC)
+            Kernels.checkpointRddId(vidS).foreach { id =>
+              spark.sparkContext.getPersistentRDDs.get(id)
+                .foreach(_.unpersist(true))
             }
-            // the label maintenance's component loop registers tracked
-            // caches/checkpoints in THIS (stream-execution) thread's
-            // scope; drain them per batch — the dead-thread backstop
-            // would otherwise hold them for the whole drain
-            Kernels.drainThreadScope()
-            ()
+            // driver state LAST — pure in-memory, cannot fail midway
+            Multimodal.sigKeepFold(imgKeep, imgAgg)
+            Multimodal.sigKeepFold(audKeep, audAgg)
+            processed.add(bid)
+            // deferred contraction: fold accumulated edges into the
+            // label table once enough batches are pending (a replayed
+            // batch that died between the labels write and the
+            // `contracted` append simply re-contracts at the next
+            // point — confluent, and the write is keyed + overwrite)
+            if (pendingBids().size >= contractEvery) contract(bid)
           }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+          // the label maintenance's component loop registers tracked
+          // caches/checkpoints in THIS (stream-execution) thread's
+          // scope; drain them per batch — the dead-thread backstop
+          // would otherwise hold them for the whole drain
+          Kernels.drainThreadScope()
+        }
       } finally spark.conf.set("spark.sql.join.preferSortMergeJoin", prevSmj)
       nkdMark("drain")
       // drain-time contraction of whatever is still pending — on the
       // CALLER thread, so the component loop plans with AQE instead of
-      // the micro-batch static planner (processAllAvailable's await
+      // the micro-batch static planner ([[Drain]]'s await
       // establishes the happens-before with the stream thread's writes)
       import scala.jdk.CollectionConverters._
       processed.asScala.lastOption.foreach(contract)
@@ -1280,19 +1217,16 @@ object DocStream {
       val version = new java.util.concurrent.atomic.AtomicInteger(0)
       val splitOf =
         substring(md5(concat(lit("inc:"), col("vec_id").cast("string"))), 1, 1)
-      val q = spark.readStream
+      val vecIds = spark.readStream
         .schema(embeddingsSchema)
         .option("pathGlobFilter", "embeddings.parquet")
         .parquet(dir)
         .select(col("vec_id"))
         .filter(splitOf < Dedup.IncBatchThreshold)
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          version.set(
-            Graph.appendBatchToKnn(batch, dir, tmp.toString, version.get()))
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      Drain.foreachBatch(vecIds) { (batch, _) =>
+        version.set(
+          Graph.appendBatchToKnn(batch, dir, tmp.toString, version.get()))
+      }
       mark("drain")
       val served = Kernels.trackedCheckpoint(
         Graph.mutualFromDirected(

@@ -33,11 +33,11 @@ case class KmvEstimate(event_type: String, n_rows: Long, est_users: Long)
   * these are north-star capability extensions: the same queries
   * declared over `readStream`, runnable unchanged against a live file/
   * Kafka source. For the oracle gate each runs against the static
-  * events parquet via the file stream source, drains with
-  * `processAllAvailable`, and returns the memory-sink table — the
-  * memory sink is test-only; production would `writeStream` to a real
-  * sink. Results are identical to the batch twins (same partial-agg +
-  * shuffle plan per micro-batch, state store between batches).
+  * events parquet via the file stream source, drains through
+  * [[Drain]], and returns the memory-sink table — the memory sink is
+  * test-only; production would write to a real sink. Results are
+  * identical to the batch twins (same partial-agg + shuffle plan per
+  * micro-batch, state store between batches).
   */
 object EventStream {
 
@@ -64,76 +64,6 @@ object EventStream {
         .parquet(dir))
   }
 
-  /** Target state-store keys per stateful shuffle partition. Each
-    * partition owns a state-store instance with per-batch checkpoint
-    * I/O, so the partition count should follow state CARDINALITY, not
-    * the batch shuffle default — the knob production turns is this
-    * per-store key budget, with partitions = |keys| / budget.
-    *
-    * 64 — re-settled by measurement after r19 raised it to 256 on a
-    * checkpoint-I/O dissection: the driver's r19 bench showed the
-    * whole streaming family uniformly ~5% under the round's drift
-    * line at 256, and the r20 re-measurement under driver conditions
-    * (3 cold A/B pairs over all 32 stream queries, `local[32]`,
-    * sf0.1, fresh JVM per run) confirmed it — every 64-budget run
-    * beat every 256-budget run (74.7/77.0/76.9 s vs 78.5/79.3/77.3 s;
-    * median per-query ratio 1.036 against 256). The extra store width
-    * at 64 costs per-batch checkpoint I/O that parallel commits on
-    * idle cores absorb, while fewer/larger stores serialize the
-    * commit path the drain actually waits on. The budget errs low;
-    * the clamp below still caps partitions at the session's
-    * parallelism, and at production key cardinalities the quotient —
-    * not the budget — is what sizes the state layout.
-    *
-    * Parameterized (env `SPARK_GRAFT_KEYS_PER_STORE`) because it is a
-    * deployment-scale knob — the committed default is what the driver
-    * measures; the env hook exists for same-session A/B pairs of the
-    * budget itself (this round's 64-vs-256 re-measurement).
-    */
-  val TargetKeysPerStore: Long =
-    sys.env.get("SPARK_GRAFT_KEYS_PER_STORE").map(_.toLong).getOrElse(64L)
-
-  /** Expected state keys for this suite's queries (event types ×
-    * hours, user ids, session keys — a few hundred at every SF the
-    * gate runs): |keys|/[[TargetKeysPerStore]] → 8 partitions at the
-    * default budget, where the 32-partition batch default was pure
-    * fixed overhead (~4× the useful work at sf0.1).
-    */
-  val ExpectedStateKeys = 512L
-
-  /** State sizing for the STREAM-STREAM interval joins: each join
-    * partition carries FOUR state stores (key-to-count and
-    * key-with-index per side), so the per-partition fixed cost is ~4×
-    * a windowed agg's and the same key count wants fewer partitions —
-    * the per-user band rows are a few hundred at gate SFs. Measured
-    * (best-of-2 warm, sf0.1): 8 partitions ≈ 2.9 s, 4 ≈ 2.2 s,
-    * 2 ≈ 2.1 s per drain; 4 keeps headroom for band growth.
-    */
-  val JoinBandKeys = 256L
-
-  /** partitions = ceil(expectedKeys / [[TargetKeysPerStore]]), clamped
-    * to [1, the session's batch shuffle parallelism] — state sizing
-    * should never EXCEED the compute parallelism the session asked for.
-    */
-  private[graft] def statePartitionsFor(spark: SparkSession, expectedKeys: Long): Int = {
-    val batchDefault = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val wanted = math.ceil(expectedKeys.toDouble / TargetKeysPerStore).toInt
-    math.max(1, math.min(batchDefault, wanted))
-  }
-
-  /** Run a streaming drain with shuffle partitions sized to the given
-    * state cardinality via [[statePartitionsFor]]. The result is
-    * identical for ANY partition count — the oracle gate asserts so,
-    * and a spec drains one query at two sizings to pin the invariance.
-    */
-  private[graft] def withStatePartitions[T](
-      spark: SparkSession, expectedKeys: Long = ExpectedStateKeys)(f: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      statePartitionsFor(spark, expectedKeys).toString)
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   /** Streaming hourly rollup, complete mode (the streaming twin of
     * Events.hourlyRollup — same result set once drained).
     */
@@ -142,13 +72,9 @@ object EventStream {
       .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
            sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-    val name = "stream_hourly_out"
-    withStatePartitions(spark) {
-      val q = agg.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("hour", "event_type")
+    Drain.withStatePartitions(spark) {
+      Drain.toMemory(agg, OutputMode.Complete(), "stream_hourly_out")
+    }.orderBy("hour", "event_type")
   }
 
   /** Arbitrary stateful aggregation with `mapGroupsWithState`: running
@@ -175,32 +101,20 @@ object EventStream {
       .as[(Long, Long, Double)]
       .groupByKey(_._1)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(updateFn)
-    val name = "stream_user_totals_out"
-    withStatePartitions(spark) {
-      val q = out.writeStream.outputMode(OutputMode.Update())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
+    val sink = Drain.withStatePartitions(spark) {
+      Drain.toMemory(out, OutputMode.Update(), "stream_user_totals_out")
     }
     // Update mode emits one row per user per batch; the final state per
     // user is the row with the highest n_events (monotone within a user).
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("n_events").desc)
-    spark.table(name)
+    sink
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select("user_id", "n_events", "value_cents")
       .orderBy("user_id")
   }
 
-  /** Event-time sessionization with `flatMapGroupsWithState`: sessions
-    * close after a 30-minute silence; completed sessions are emitted
-    * as soon as a later event proves the gap, the trailing open
-    * session stays in the state store awaiting more data (so for a
-    * static input the result is the batch sessionization minus each
-    * user's final open session — exactly what a live pipeline would
-    * have emitted so far). Money in integer cents, as in
-    * [[userTotals]].
-    */
   /** `stream_session_window`: per-user gap sessions via the BUILT-IN
     * `session_window` aggregation — the declarative complement to
     * [[sessionizeStream]]'s hand-rolled `mapGroupsWithState`. Spark
@@ -224,15 +138,20 @@ object EventStream {
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("n_events"), col("session_value"))
-    val name = "stream_session_window_out"
-    withStatePartitions(spark) {
-      val q = agg.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("user_id", "session_start")
+    Drain.withStatePartitions(spark) {
+      Drain.toMemory(agg, OutputMode.Append(), "stream_session_window_out")
+    }.orderBy("user_id", "session_start")
   }
 
+  /** Event-time sessionization with `flatMapGroupsWithState`: sessions
+    * close after a 30-minute silence; completed sessions are emitted
+    * as soon as a later event proves the gap, the trailing open
+    * session stays in the state store awaiting more data (so for a
+    * static input the result is the batch sessionization minus each
+    * user's final open session — exactly what a live pipeline would
+    * have emitted so far). Money in integer cents, as in
+    * [[userTotals]].
+    */
   def sessionizeStream(spark: SparkSession, dir: String): DataFrame = {
     implicit val inEnc: Encoder[(Long, Long, Long, Double)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble)
@@ -273,13 +192,9 @@ object EventStream {
       .as[(Long, Long, Long, Double)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout)(fn)
-    val name = "stream_sessionize_out"
-    withStatePartitions(spark) {
-      val q = out.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
+    Drain.withStatePartitions(spark) {
+      Drain.toMemory(out, OutputMode.Append(), "stream_sessionize_out")
     }
-    spark.table(name)
       .select(col("user_id"), col("session_seq"), col("n_events"),
               expr("timestamp_micros(start_us)").as("session_start"),
               expr("timestamp_micros(end_us)").as("session_end"),
@@ -298,13 +213,9 @@ object EventStream {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("window.start").as("hour"), col("event_type"), col("n_events"))
-    val name = "stream_windowed_out"
-    withStatePartitions(spark) {
-      val q = agg.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("hour", "event_type")
+    Drain.withStatePartitions(spark) {
+      Drain.toMemory(agg, OutputMode.Append(), "stream_windowed_out")
+    }.orderBy("hour", "event_type")
   }
 
   /** Ranks kept per finalized window by [[trendingTopK]]. */
@@ -328,13 +239,9 @@ object EventStream {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("window.start").as("hour"), col("event_type"), col("n_events"))
-    val name = "stream_topk_out"
-    withStatePartitions(spark) {
-      val q = agg.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
+    Drain.withStatePartitions(spark) {
+      Drain.toMemory(agg, OutputMode.Append(), "stream_topk_out")
     }
-    spark.table(name)
       .withColumn("rnk", row_number().over(
         Window.partitionBy("hour").orderBy(col("n_events").desc, col("event_type")))
         .cast("long"))
@@ -366,13 +273,9 @@ object EventStream {
         expr("max_by(value, ord)").as("close"))
       .select(col("window.start").as("hour"), col("event_type"),
         col("n_events"), col("open"), col("high"), col("low"), col("close"))
-    val name = "stream_ohlc_out"
-    withStatePartitions(spark) {
-      val q = agg.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("event_type", "hour")
+    Drain.withStatePartitions(spark) {
+      Drain.toMemory(agg, OutputMode.Append(), "stream_ohlc_out")
+    }.orderBy("event_type", "hour")
   }
 
   /** STREAM-STREAM interval join: each error event joined to the same
@@ -402,13 +305,9 @@ object EventStream {
         col("p_ts") < col("e_ts"))
       .select(col("error_id"), col("user_id"), col("purchase_id"),
         col("p_value").cast("decimal(18,2)").cast("double").as("purchase_value"))
-    val name = "stream_error_purchase_out"
-    withStatePartitions(spark, JoinBandKeys) {
-      val q = joined.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("error_id", "purchase_id")
+    Drain.withStatePartitions(spark, Drain.JoinBandKeys) {
+      Drain.toMemory(joined, OutputMode.Append(), "stream_error_purchase_out")
+    }.orderBy("error_id", "purchase_id")
   }
 
   /** `stream_error_purchase_outer`: the LEFT OUTER stream-stream
@@ -440,13 +339,9 @@ object EventStream {
         col("p_ts") < col("e_ts"), "left_outer")
       .select(col("error_id"), col("user_id"), col("purchase_id"),
         col("p_value").cast("decimal(18,2)").cast("double").as("purchase_value"))
-    val name = "stream_error_purchase_outer_out"
-    withStatePartitions(spark, JoinBandKeys) {
-      val q = joined.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("error_id", "purchase_id")
+    Drain.withStatePartitions(spark, Drain.JoinBandKeys) {
+      Drain.toMemory(joined, OutputMode.Append(), "stream_error_purchase_outer_out")
+    }.orderBy("error_id", "purchase_id")
   }
 
   /** `stream_error_purchase_full`: the FULL OUTER stream-stream
@@ -480,13 +375,9 @@ object EventStream {
         coalesce(col("user_id"), col("p_user")).as("user_id"),
         col("purchase_id"),
         col("p_value").cast("decimal(18,2)").cast("double").as("purchase_value"))
-    val name = "stream_error_purchase_full_out"
-    withStatePartitions(spark, JoinBandKeys) {
-      val q = joined.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name).orderBy("error_id", "purchase_id")
+    Drain.withStatePartitions(spark, Drain.JoinBandKeys) {
+      Drain.toMemory(joined, OutputMode.Append(), "stream_error_purchase_full_out")
+    }.orderBy("error_id", "purchase_id")
   }
 
   /** Streaming cardinality sketch: per-type distinct-user estimates on
@@ -539,17 +430,14 @@ object EventStream {
       .as[(String, Long, Long)]
       .groupByKey(_._1)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(fn)
-    val name = "stream_approx_users_out"
-    withStatePartitions(spark) {
-      val q = out.writeStream.outputMode(OutputMode.Update())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
+    val sink = Drain.withStatePartitions(spark) {
+      Drain.toMemory(out, OutputMode.Update(), "stream_approx_users_out")
     }
     // Update mode emits one row per type per batch; the final state is
     // the row with the highest n_rows (strictly monotone within a key).
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("event_type").orderBy(col("n_rows").desc)
-    spark.table(name)
+    sink
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select("event_type", "est_users")
@@ -579,15 +467,12 @@ object EventStream {
       .select(explode(Sketches.rowBuckets(col("user_id"))).as("rb"))
       .groupBy(col("rb.j").as("j"), col("rb.b").as("b"))
       .agg(count(lit(1)).as("cnt"))
-    val name = "stream_heavy_hitters_grid"
-    withStatePartitions(spark) {
+    val sink = Drain.withStatePartitions(spark) {
       // Complete mode re-emits the whole (≤256-row) grid per batch; the
       // drained table is the final full-history sketch
-      val q = grid.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
+      Drain.toMemory(grid, OutputMode.Complete(), "stream_heavy_hitters_grid")
     }
-    Sketches.probeSketchTopK(spark, dir, spark.table(name))
+    Sketches.probeSketchTopK(spark, dir, sink)
   }
 
   /** `stream_sketch_maintain`: the DURABLE-store twin of
@@ -611,16 +496,11 @@ object EventStream {
     // failure anywhere never leaks the dir; the serve result is an
     // eager checkpoint leaf with no dependency on the deleted store
     try {
-      val q = readEventsStream(spark, dir)
-        .select(col("ts"), col("user_id"))
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          Sketches.dailyCmsGridsOf(batch)
-            .write.mode("append").partitionBy("day").parquet(s"$tmp/cms")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      val events = readEventsStream(spark, dir).select(col("ts"), col("user_id"))
+      Drain.foreachBatch(events) { (batch, _) =>
+        Sketches.dailyCmsGridsOf(batch)
+          .write.mode("append").partitionBy("day").parquet(s"$tmp/cms")
+      }
       val merged = spark.read.parquet(s"$tmp/cms")
         .groupBy("j", "b").agg(sum("cnt").as("cnt"))
       graft.operators.Kernels.trackedCheckpoint(

@@ -40,7 +40,7 @@ object PlanDump {
         case e: Throwable =>
           System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
       } finally {
-        graft.operators.Dedup.retireCaches()
+        graft.operators.Kernels.retireCaches()
         System.gc()
       }
     }

@@ -23,7 +23,7 @@ object ProfileMain {
     def time[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"[profile] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      Dedup.retireCaches()
+      Kernels.retireCaches()
       System.gc()
       r
     }
@@ -69,7 +69,7 @@ object ProfileMain {
       val secondHalf = secs.drop(32).sum / 32
       println(f"[profile] bpe 64-round flatness: rounds 1-32 mean=$firstHalf%.2f s, " +
         f"rounds 33-64 mean=$secondHalf%.2f s, max=${secs.max}%.2f s")
-      Dedup.retireCaches()
+      Kernels.retireCaches()
       System.gc()
     }
     spark.stop()

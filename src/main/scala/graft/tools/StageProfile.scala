@@ -62,7 +62,7 @@ object StageProfile {
       val t0 = System.nanoTime()
       q(spark, sfDir).count()
       val warm = (System.nanoTime() - t0) / 1e9
-      graft.operators.Dedup.retireCaches()
+      graft.operators.Kernels.retireCaches()
       System.gc()
       stages.clear()
       recording = true
@@ -70,7 +70,7 @@ object StageProfile {
       q(spark, sfDir).count()
       val dt = (System.nanoTime() - t1) / 1e9
       recording = false
-      graft.operators.Dedup.retireCaches()
+      graft.operators.Kernels.retireCaches()
       System.gc()
       import scala.jdk.CollectionConverters._
       val all = stages.asScala.toSeq.sortBy(-_.ms)

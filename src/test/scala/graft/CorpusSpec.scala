@@ -137,7 +137,7 @@ class CorpusSpec extends AnyFunSuite {
 
   test("bigram PMI: frequent pairs only, ranked, and exact on a synthetic collocation") {
     // PMI pins tracked caches (count frames) — retire like Bench does
-    val rows = try Corpus.bigramPmi(spark, sf).collect() finally Dedup.retireCaches()
+    val rows = try Corpus.bigramPmi(spark, sf).collect() finally Kernels.retireCaches()
     assert(rows.length <= Corpus.PmiTopK)
     rows.foreach(r => assert(r.getAs[Long]("n") >= Corpus.PmiMinCount))
     val pmis = rows.map(r => (r.getAs[Double]("pmi"), r.getAs[String]("bigram")))
@@ -150,7 +150,7 @@ class CorpusSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("pmi").toFile
     try {
       docs.write.mode("overwrite").parquet(new java.io.File(tmp, "documents.parquet").getPath)
-      val r = try Corpus.bigramPmi(spark, tmp.getPath).collect() finally Dedup.retireCaches()
+      val r = try Corpus.bigramPmi(spark, tmp.getPath).collect() finally Kernels.retireCaches()
       assert(r.length == 1 && r(0).getAs[String]("bigram") == "alpha beta")
       val want = BigDecimal(math.log((6.0 / 6.0) / ((6.0 / 12.0) * (6.0 / 12.0))))
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -167,7 +167,7 @@ class CorpusSpec extends AnyFunSuite {
     // vocabTop pins a tracked cache whose canonical plan SUBSUMES other
     // token aggregates (wc) — leaked, it turns their plan audits into
     // InMemoryRelation scans; retire like Bench/Verify do
-    val rows = try Corpus.vocabTop(spark, sf).collect() finally Dedup.retireCaches()
+    val rows = try Corpus.vocabTop(spark, sf).collect() finally Kernels.retireCaches()
     // exact row count: min(K, |vocabulary|) — the synthetic corpus has a
     // SMALL closed vocabulary (31 types), so a tautological <= K bound
     // would mask dropped rows

@@ -370,7 +370,7 @@ class OperatorsSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("neighbor_id"))).toSet
     val ivf = Similarity.annRangeIvf(spark, sf).collect()
       .map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("neighbor_id"))).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     // soundness: same rounded cosine + threshold over fewer candidates
     // — a hit outside the exact answer would be a scoring divergence
     assert(ivf.subsetOf(exact))
@@ -390,7 +390,7 @@ class OperatorsSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("neighbor_id"))).toSet
     val ivfpq = ProductQuant.annIvfPq(spark, sf).collect()
       .map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("neighbor_id"))).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(ivfpq.nonEmpty && ivfpq.size == exact.size)
     val recall = ivfpq.intersect(exact).size.toDouble / exact.size
     // the composed index loses only where BOTH stages lose: a true
@@ -405,7 +405,7 @@ class OperatorsSpec extends AnyFunSuite {
     val served = Similarity.annImageSearch(spark, sf).collect()
     val vecs = Multimodal.imageVectors(spark, sf).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getSeq[Double](1).toArray).toMap
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(served.nonEmpty)
     // rank contract: dense 1..k, sims non-increasing per probe
     served.groupBy(_.getAs[Long]("probe_id")).foreach { case (pid, rs) =>
@@ -449,7 +449,7 @@ class OperatorsSpec extends AnyFunSuite {
     val got = walked.map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("neighbor_id"))).toSet
     val nodes = Graph.mutualKnn(spark, sf).collect()
       .flatMap(r => Seq(r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"))).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(got.nonEmpty)
     // the walk can only ever visit edge-incident nodes (plus the entry)
     walked.foreach(r => assert(nodes(r.getAs[Long]("neighbor_id")),
@@ -472,7 +472,7 @@ class OperatorsSpec extends AnyFunSuite {
     val carried = Graph.knnMaintain(spark, sf, thresh = "0").collect().map(_.toSeq).toSeq
     assert(carried == oneShot,
       "an empty batch must serve the stored directed lists verbatim")
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     // MIXED merge on a synthetic layout (the gate corpus's ~62-member
     // cells are ALL touched by any hash split, so the mix never binds
     // there): cell 0 holds the batch vector (recompute), cell 1 holds
@@ -493,7 +493,7 @@ class OperatorsSpec extends AnyFunSuite {
     val merged = edges(Graph.maintainedEdges(spark, idx, hist, batchCells))
     val full = edges(Graph.maintainedEdges(spark, idx,
       Graph.directedTopK(spark, idx), allCells))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(merged.nonEmpty && merged == full,
       s"mixed carry-over + recompute must merge to the one-shot build: $merged vs $full")
     // both cells must contribute edges, or the mix proved nothing
@@ -513,7 +513,7 @@ class OperatorsSpec extends AnyFunSuite {
     val curve = Seq(1, 4, 8).map { w =>
       val got = Similarity.annGraph(spark, sf, beamWidth = w).collect()
         .map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("neighbor_id"))).toSet
-      Dedup.retireCaches()
+      Kernels.retireCaches()
       w -> got.intersect(exact).size.toDouble / exact.size
     }
     info(curve.map { case (w, r) => f"recall@beam=$w: $r%.3f" }.mkString(", "))
@@ -533,12 +533,12 @@ class OperatorsSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("neighbor_id"))).toSet
     val flat = Similarity.annGraph(spark, sf).collect()
       .map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("neighbor_id"))).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val layered = Similarity.annGraphLayered(spark, sf).collect()
       .map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("neighbor_id"))).toSet
     val nodes = Graph.mutualKnn(spark, sf).collect()
       .flatMap(r => Seq(r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"))).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(layered.nonEmpty)
     layered.foreach { case (_, n) =>
       assert(nodes(n), "layered walk emitted a node outside the kNN graph") }
@@ -574,7 +574,7 @@ class OperatorsSpec extends AnyFunSuite {
       val drained = Graph.mutualFromDirected(
           spark.read.parquet(s"$tmp/lists_v$v2"))
         .orderBy("vec_a", "vec_b").collect().map(_.toSeq).toSeq
-      Dedup.retireCaches()
+      Kernels.retireCaches()
       assert(drained.nonEmpty && drained == oneShot,
         "two-batch maintenance must drain to the one-shot mutual graph")
 
@@ -582,13 +582,13 @@ class OperatorsSpec extends AnyFunSuite {
       // the maintained edges exactly like the artifact — the walk and
       // therefore the ranked answer are value-identical
       val rebuiltServe = Similarity.annGraph(spark, sf).collect().map(_.toSeq).toSeq
-      Dedup.retireCaches()
+      Kernels.retireCaches()
       val drainedServe = Similarity.annGraphOver(spark, sf,
           spark.read.parquet(s"$tmp/lists_v$v2")
             .select(col("src"), col("dst"), col("sim"))
             .transform(Graph.mutualFromDirected))
         .collect().map(_.toSeq).toSeq
-      Dedup.retireCaches()
+      Kernels.retireCaches()
       assert(drainedServe.nonEmpty && drainedServe == rebuiltServe,
         "beam serve over the two-batch drained store must equal the rebuilt serve")
     } finally operators.Kernels.rmTree(tmp.toFile)
@@ -596,9 +596,9 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("ann_graph_maintain serves the maintained edges identically to the rebuilt artifact") {
     val rebuilt = Similarity.annGraph(spark, sf).collect().map(_.toSeq).toSeq
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val maintained = Similarity.annGraphMaintain(spark, sf).collect().map(_.toSeq).toSeq
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(maintained.nonEmpty && maintained == rebuilt,
       "maintained-edge beam serve must equal the one-shot-artifact serve row for row")
   }
@@ -609,7 +609,7 @@ class OperatorsSpec extends AnyFunSuite {
     val curve = Seq(1, 2, 4).map { np =>
       val got = ProductQuant.annIvfPq(spark, sf, np).collect()
         .map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("neighbor_id"))).toSet
-      Dedup.retireCaches()
+      Kernels.retireCaches()
       np -> got.intersect(exact).size.toDouble / exact.size
     }
     info(curve.map { case (np, r) => f"recall@nprobe=$np: $r%.3f" }.mkString(", "))
@@ -910,7 +910,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("media keep-list: one group per (modality, fingerprint), min doc kept, counts cover") {
     val keep = Multimodal.mediaKeep(spark, sf).collect()
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(keep.nonEmpty)
     // all three modalities present, and each group keeps >= 1 member
     assert(keep.map(_.getAs[String]("modality")).toSet == Set("image", "audio", "video"))
@@ -951,7 +951,7 @@ class OperatorsSpec extends AnyFunSuite {
     // group's MINIMUM doc and n_members its size, value for value
     val audSigs = Multimodal.audioSigCorpus(spark, sf).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("ph"))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val expAudio = audSigs.groupBy(_._2).map { case (sig, ds) =>
       (sig.toString, ds.map(_._1).min, ds.length.toLong)
     }.toSet
@@ -964,7 +964,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("media near-dup keep-list: per-modality components replay, coverage exact") {
     val keep = Multimodal.mediaKeepNearDup(spark, sf).collect()
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(keep.map(_.getAs[String]("modality")).toSet == Set("image", "audio", "video"))
     // the corpus's planted near-dups must actually cluster
     assert(keep.exists(_.getAs[Long]("n_members") > 1L))
@@ -983,7 +983,7 @@ class OperatorsSpec extends AnyFunSuite {
     }
     def pairsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] = {
       val ps = df.collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSeq
-      Dedup.retireCaches(); ps
+      Kernels.retireCaches(); ps
     }
     val gotByMod = keep.groupBy(_.getAs[String]("modality")).map { case (m, rows) =>
       m -> rows.map(r => (r.getAs[Long]("keep_id"), r.getAs[Long]("n_members"))).toSet
@@ -993,15 +993,15 @@ class OperatorsSpec extends AnyFunSuite {
         s"$mod: clusters diverge from the union-find replay over the pair stream")
     val imgUniv = Multimodal.phashSigCorpus(spark, sf).collect()
       .map(_.getAs[Long]("doc_id")).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     check("image", imgUniv, pairsOf(Multimodal.phashPairs(spark, sf)))
     val audUniv = Multimodal.audioSigCorpus(spark, sf).collect()
       .map(_.getAs[Long]("doc_id")).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     check("audio", audUniv, pairsOf(Multimodal.audioNearDup(spark, sf)))
     val vidUniv = Multimodal.corpusFrameSigs(spark, sf).select("doc_id").distinct()
       .collect().map(_.getAs[Long]("doc_id")).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     check("video", vidUniv, pairsOf(Multimodal.videoNearDup(spark, sf)))
     // the near tier subsumes the exact tier: identical audio signatures
     // pair at Hamming 0, so each mm_media_keep audio group must land
@@ -1010,7 +1010,7 @@ class OperatorsSpec extends AnyFunSuite {
     // comparable one)
     val audSigs = Multimodal.audioSigCorpus(spark, sf).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("ph"))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val nearPairs = pairsOf(Multimodal.audioNearDup(spark, sf))
     val label = {
       val parent = scala.collection.mutable.Map[Long, Long]() ++ audUniv.map(d => d -> d)
@@ -1044,7 +1044,7 @@ class OperatorsSpec extends AnyFunSuite {
         .groupBy("modality", "fingerprint")
         .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_members")))
     val maintained = rows(Multimodal.mediaKeepMaintain(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(maintained == rebuilt, "maintained keep-list diverges from the rebuild")
     assert(maintained.nonEmpty && maintained.map(_._1) == Set("image", "audio", "video"))
     // the batch must actually TOUCH history groups (otherwise the merge
@@ -1065,7 +1065,7 @@ class OperatorsSpec extends AnyFunSuite {
       Multimodal.mergeMediaKeep(store, b1), b2))
     val m21 = rows(Multimodal.mergeMediaKeep(
       Multimodal.mergeMediaKeep(store, b2), b1))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(m12 == maintained, "batch-split merge order 1,2 diverges")
     assert(m21 == maintained, "batch-split merge order 2,1 diverges")
   }
@@ -1074,7 +1074,7 @@ class OperatorsSpec extends AnyFunSuite {
     val maintained = Multimodal.mediaKeepNearDupMaintain(spark, sf).collect()
       .map(r => (r.getAs[String]("modality"), r.getAs[Long]("keep_id"),
         r.getAs[Long]("n_members"))).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     // INDEPENDENT rebuild: collect the banded pair streams over the
     // same history-thresholded sig frames and union-find them
     // driver-side — the PAIR-STREAM replay, a different path from the
@@ -1100,7 +1100,7 @@ class OperatorsSpec extends AnyFunSuite {
       "image" -> pairs(Multimodal.sigBandPairs(imgSig)),
       "audio" -> pairs(Multimodal.sigBandPairs(audSig)),
       "video" -> pairs(Multimodal.videoClipPairs(vidSig)))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val rebuilt = universes.keySet.flatMap { m =>
       unionFind(universes(m), edgesByMod(m)).map { case (k, n) => (m, k, n) }
     }
@@ -1128,7 +1128,7 @@ class OperatorsSpec extends AnyFunSuite {
     val maintained = Multimodal.mediaKeepNearDupMaintain(spark, sf).collect()
       .map(r => (r.getAs[String]("modality"), r.getAs[Long]("keep_id"),
         r.getAs[Long]("n_members"))).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val (imgSig, audSig, vidSig) = Multimodal.mediaHistSigFrames(spark, sf)
     val splitOf =
       substring(md5(concat(lit("inc:"), col("doc_id").cast("string"))), 1, 1)
@@ -1169,7 +1169,7 @@ class OperatorsSpec extends AnyFunSuite {
     for (order <- Seq(Seq(0, 1), Seq(1, 0))) {
       val drained = foldSig(imgSig, "image", order) ++
         foldSig(audSig, "audio", order) ++ foldVid(order)
-      Dedup.retireCaches()
+      Kernels.retireCaches()
       assert(drained == maintained,
         s"order $order drained ${drained.size} != maintained ${maintained.size}")
     }
@@ -1185,9 +1185,9 @@ class OperatorsSpec extends AnyFunSuite {
       .map(r => (r.getAs[String]("modality"), r.getAs[Long]("keep_id"),
         r.getAs[Long]("n_members"))).toSet
     val maintained = rows(Multimodal.mediaKeepNearDupMaintain(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val drained = rows(graft.streaming.DocStream.streamMediaKeepNearDup(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(drained == maintained,
       s"stream drain (${drained.size}) must equal the batch maintenance (${maintained.size})")
   }
@@ -1219,11 +1219,11 @@ class OperatorsSpec extends AnyFunSuite {
         .map(r => (r.getAs[String]("modality"), r.getAs[Long]("keep_id"),
           r.getAs[Long]("n_members"))).toSet
       val maintained = rows(Multimodal.mediaKeepNearDupMaintain(spark, sf))
-      Dedup.retireCaches()
+      Kernels.retireCaches()
       val drained = rows(graft.streaming.DocStream.streamMediaKeepNearDupFrom(
         spark, sf, in.toString, "*.parquet",
         filesPerTrigger = Some(1), contractEvery = 2))
-      Dedup.retireCaches()
+      Kernels.retireCaches()
       assert(drained == maintained,
         s"3-batch deferred drain (${drained.size}) must equal the one-shot " +
           s"maintenance (${maintained.size})")
@@ -1239,9 +1239,9 @@ class OperatorsSpec extends AnyFunSuite {
       .map(r => (r.getAs[String]("modality"), r.getAs[Long]("keep_id"),
         r.getAs[Long]("n_members"))).toSet
     val served = rows(Multimodal.mediaKeepNearDup(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val rebuilt = rows(Multimodal.mediaKeepNearDupBuild(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(served == rebuilt,
       s"memo (${served.size}) must equal the fresh build (${rebuilt.size})")
   }
@@ -1257,9 +1257,9 @@ class OperatorsSpec extends AnyFunSuite {
       .map(r => (r.getAs[String]("modality"), r.getAs[Long]("keep_id"),
         r.getAs[Long]("n_members"))).toSet
     val batch = rows(Multimodal.mediaKeepNearDup(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val served = rows(Multimodal.mediaKeepNearDupServed(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(served == batch,
       s"served artifact (${served.size}) must equal the batch table (${batch.size})")
     val p = Multimodal.mediaKeepNearDupServed(spark, sf)
@@ -1272,9 +1272,9 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("pipeline_media_training_set: sampled near-dup survivors tile into byte packs") {
     val keep = Multimodal.mediaKeepNearDup(spark, sf).collect()
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val out = Sampling.mediaTrainingSet(spark, sf).collect()
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     def md5hex(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     // stage 2 contract: the output is EXACTLY the mpipe-sampled slice
@@ -1314,9 +1314,9 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("pack_media: packs tile the keep-list exactly, permutation and prefix sums replayed") {
     val keep = Multimodal.mediaKeep(spark, sf).collect()
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val packed = Sampling.packMedia(spark, sf).collect()
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     // bijection: every keep-list survivor lands in exactly one slot
     assert(packed.length == keep.length)
     assert(packed.map(_.getAs[Long]("keep_id")).toSet ==
@@ -1392,7 +1392,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("scene cuts pair each present frame with its nearest present predecessor") {
     val sigs = Multimodal.corpusFrameSigs(spark, sf).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("sample_no"), r.getAs[Long]("ph")))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val byDoc = sigs.groupBy(_._1)
     val cuts = Multimodal.videoSceneCuts(spark, sf).collect()
     assert(cuts.nonEmpty)
@@ -1447,9 +1447,9 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("keyframes are consistent with the cut detector: one shot per cut plus one") {
     val cuts = Multimodal.videoSceneCuts(spark, sf).collect()
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val shots = Multimodal.videoKeyframes(spark, sf).collect()
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(shots.nonEmpty)
     val cutsByDoc = cuts.groupBy(_.getAs[Long]("doc_id"))
     val shotsByDoc = shots.groupBy(_.getAs[Long]("doc_id"))
@@ -1593,7 +1593,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(served.nonEmpty && served == computed,
       "served BM25 must equal the computed ranking exactly")
     val vcomputed = Retrieval.tfidfSearch(spark, sf).collect().map(_.toSeq).toSeq
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     // a FRESH session serves both rankers from the parquet alone
     val fresh = spark.newSession()
     assert(Retrieval.bm25SearchServed(fresh, sf).collect().map(_.toSeq).toSeq == computed)
@@ -1668,7 +1668,7 @@ class OperatorsSpec extends AnyFunSuite {
     // the stored multi-vector index serves the identical ranking:
     // deduped occurrences + vocabulary vectors, no text access
     val served = Retrieval.maxSimServed(spark, sf).collect().map(_.toSeq).toSeq
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(served.nonEmpty && served == rows.map(_.toSeq).toSeq,
       "maxsim served from the stored index must equal the computed ranking")
   }
@@ -1798,7 +1798,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("bigram cross-entropy is positive, bigram counts tile, and order matters") {
     val rows = Corpus.docPerplexityBigram(spark, sf).collect()
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(rows.nonEmpty)
     val nToks = Tables.documents(spark, sf)
       .select(col("doc_id"), size(TextAnalysis.tokens(lower(col("text")))).cast("long").as("n"))
@@ -1813,7 +1813,7 @@ class OperatorsSpec extends AnyFunSuite {
     // statistics must not be a monotone re-ranking of each other
     val uni = Corpus.docSurprisal(spark, sf).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("cross_entropy")).toMap
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val biRank = rows.sortBy(_.getAs[Double]("cross_entropy")).map(_.getAs[Long]("doc_id"))
     val uniRank = biRank.sortBy(uni)
     assert(biRank.toSeq != uniRank.toSeq,
@@ -1845,7 +1845,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("semantic near-dup is a subset of the exact verifier and holds its recall floor") {
     val sem = Dedup.semanticNearDup(spark, sf).collect()
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"))).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val exact = Dedup.embeddingNearDup(spark, sf).collect()
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"))).toSet
     assert(sem.subsetOf(exact),
@@ -1862,10 +1862,10 @@ class OperatorsSpec extends AnyFunSuite {
   test("incremental semantic dedup is the cross-split slice of the full in-cell pairs") {
     val inc = Dedup.incrementalSemantic(spark, sf).collect()
       .map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("hist_id"))).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val full = Dedup.semanticNearDup(spark, sf).collect()
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"))).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     def split(id: Long): String = java.security.MessageDigest.getInstance("MD5")
       .digest(s"inc:$id".getBytes("UTF-8")).map("%02x".format(_)).mkString.take(1)
     // every emitted pair crosses the split in the right direction...
@@ -1922,10 +1922,10 @@ class OperatorsSpec extends AnyFunSuite {
     // pairs it should preserve
     val uncapped = Dedup.semanticNearDupCapped(spark, sf, Int.MaxValue).collect()
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"))).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val capped = Dedup.semanticNearDupCapped(spark, sf, 20).collect()
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"))).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(capped.subsetOf(uncapped),
       "the split must only remove pairs — a new pair would be a false positive")
     assert(capped.nonEmpty && capped.size < uncapped.size,
@@ -1940,7 +1940,7 @@ class OperatorsSpec extends AnyFunSuite {
     // and at the PRODUCTION cap the tier is unchanged: cap inactive here
     val prodCap = Dedup.semanticNearDupCapped(spark, sf, Dedup.SemCellCap).collect()
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"))).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(prodCap == uncapped,
       "SemCellCap must be inactive at this tier (cells smaller than the cap)")
   }
@@ -1964,27 +1964,27 @@ class OperatorsSpec extends AnyFunSuite {
     import graft.streaming.DocStream
     val smh = DocStream.streamIncrementalMinHash(spark, sf).collect().map(_.toSeq).toSeq
     val bmh = Dedup.incrementalMinHash(spark, sf).collect().map(_.toSeq).toSeq
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(smh.nonEmpty && smh == bmh,
       "drained band-store probe must equal the batch incremental minhash bit-for-bit")
     val sse = DocStream.streamIncrementalSemantic(spark, sf).collect().map(_.toSeq).toSeq
     val bse = Dedup.incrementalSemantic(spark, sf).collect().map(_.toSeq).toSeq
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(sse.nonEmpty && sse == bse,
       "drained celled-index probe must equal the batch incremental semantic bit-for-bit")
     val sph = DocStream.streamPhashIncremental(spark, sf).collect().map(_.toSeq).toSeq
     val bph = Multimodal.phashIncremental(spark, sf).collect().map(_.toSeq).toSeq
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(sph.nonEmpty && sph == bph,
       "drained phash-store probe must equal the batch incremental phash bit-for-bit")
     val svn = DocStream.streamVideoNearDup(spark, sf).collect().map(_.toSeq).toSeq
     val bvn = Multimodal.videoNearDupIncremental(spark, sf).collect().map(_.toSeq).toSeq
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(svn.nonEmpty && svn == bvn,
       "drained frame-store probe must equal the batch incremental clip near-dup bit-for-bit")
     val san = DocStream.streamAudioNearDup(spark, sf).collect().map(_.toSeq).toSeq
     val ban = Multimodal.audioNearDupIncremental(spark, sf).collect().map(_.toSeq).toSeq
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(san.nonEmpty && san == ban,
       "drained audio-store probe must equal the batch incremental audio near-dup bit-for-bit")
     // both sides respect the ingest split: batch ids hash below the
@@ -2062,7 +2062,7 @@ class OperatorsSpec extends AnyFunSuite {
     // gate uses the same exact-top-k reference (floor from the measured
     // deterministic value, see the radius-2 note above)
     val km = pairs(Similarity.annIvfKmeans(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val recKm = km.intersect(exact).size.toDouble / exact.size
     info(f"recall@${Similarity.TopK}: kmeans-ivf=$recKm%.3f (searching ~${Similarity.KmProbeCells}/${KMeansCodebook.K} of the corpus)")
     // 0.86 measured (deterministic) — searching 1/4 of the corpus via
@@ -2082,7 +2082,7 @@ class OperatorsSpec extends AnyFunSuite {
       .toSet
     val plain = rows(Dedup.incremental(spark, sf))
     val bloom = rows(Dedup.incrementalBloom(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(plain.nonEmpty && bloom == plain)
   }
 
@@ -2120,7 +2120,7 @@ class OperatorsSpec extends AnyFunSuite {
       val out = Corpus.docSurprisal(spark, sf).collect()
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_tokens"),
           r.getAs[Double]("cross_entropy"))).toSeq
-      Dedup.retireCaches()
+      Kernels.retireCaches()
       out
     }
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -2148,10 +2148,10 @@ class OperatorsSpec extends AnyFunSuite {
     val inc = Dedup.incremental(spark, sf).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[String]("fp"), r.getAs[Long]("n_batch_dups"))).toMap
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val nd = Dedup.incrementalMinHash(spark, sf).collect()
       .map(_.getAs[Long]("batch_id")).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val q = TextAnalysis.qualityScore(spark, sf).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("quality")).toMap
     val want = inc.collect {
@@ -2161,7 +2161,7 @@ class OperatorsSpec extends AnyFunSuite {
     val got = Corpus.ingest(spark, sf).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("fp"),
         r.getAs[Long]("n_batch_dups"), r.getAs[Double]("quality"))).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(want.nonEmpty && got == want,
       "the composed plan must equal the stage-by-stage composition")
     assert(got.size < inc.size, "the gates must drop documents at this SF")
@@ -2333,7 +2333,7 @@ class OperatorsSpec extends AnyFunSuite {
       .toDF("doc_a", "doc_b")
     val got = operators.Dedup.clustersFromEdges(docs, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    operators.Dedup.retireCaches()
+    operators.Kernels.retireCaches()
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
                        5L -> 5L, 6L -> 5L,
                        7L -> 7L, 8L -> 7L, 9L -> 7L, 10L -> 7L,
@@ -2476,7 +2476,7 @@ class OperatorsSpec extends AnyFunSuite {
     val out = SparkTestSession.tmpDir("keep-artifact").resolve("keep").toString
     Dedup.writeKeepList(spark, sf, out)
     val computed = Dedup.keep(spark, sf).collect().map(_.toSeq).toSeq
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val fresh = spark.newSession()
     val served = Dedup.keepListFrom(fresh, out).collect().map(_.toSeq).toSeq
     assert(served.nonEmpty && served == computed)
@@ -2494,7 +2494,7 @@ class OperatorsSpec extends AnyFunSuite {
     KMeansCodebook.writeIndex(spark, sf, root)
     ProductQuant.writeCodebooks(spark, sf, root)
     val trained = ProductQuant.annIvfPq(spark, sf).collect().map(_.toSeq).toSeq
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val fresh = spark.newSession()
     val served = ProductQuant.annIvfPqFrom(fresh, sf, root).collect().map(_.toSeq).toSeq
     assert(served.nonEmpty && served == trained)
@@ -2544,7 +2544,7 @@ class OperatorsSpec extends AnyFunSuite {
     // stage 3: a FRESH session serves the identical ranked answer from
     // the parquet artifact (exact decimals round-trip; no training
     // memos of this session are consulted for the codebooks)
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val fresh = spark.newSession()
     val served = ProductQuant.pipelineIndex(fresh, sf).collect().map(_.toSeq).toSeq
     assert(served.nonEmpty && served == out.map(_.toSeq).toSeq)
@@ -2569,7 +2569,7 @@ class OperatorsSpec extends AnyFunSuite {
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("cluster=")).sorted
     assert(dirs.length == KMeansCodebook.K,
       s"expected ${KMeansCodebook.K} cluster partitions, got ${dirs.mkString(",")}")
-    Dedup.retireCaches()
+    Kernels.retireCaches()
   }
 
   test("keep-list maintenance merges a cluster-bridging batch exactly (synthetic)") {
@@ -2584,7 +2584,7 @@ class OperatorsSpec extends AnyFunSuite {
     val batchEdges = Seq((5L, 2L), (5L, 4L), (7L, 8L)).toDF("doc_a", "doc_b")
     val got = Dedup.maintainKeep(histLabels, batchDocs, batchEdges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     // merged {1,2,3,4,5} under rep 1; {7,8} under 7; singletons 6, 20;
     // untouched {10,11} rides through
     assert(got == Set((1L, 5L), (6L, 1L), (7L, 2L), (10L, 2L), (20L, 1L)))
@@ -2592,9 +2592,9 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("maintained keep-list equals the full recompute over the union corpus") {
     val maintained = Dedup.keepMaintain(spark, sf).collect().map(_.toSeq).toSeq
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val recomputed = Dedup.keep(spark, sf).collect().map(_.toSeq).toSeq
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(maintained.nonEmpty && maintained == recomputed,
       "incremental maintenance must be EXACT — not an approximation of the backfill")
   }
@@ -2603,10 +2603,10 @@ class OperatorsSpec extends AnyFunSuite {
     val root = SparkTestSession.tmpDir("keep-state").resolve("state").toString
     Dedup.writeKeepState(spark, sf, root)
     val inSession = Dedup.keepMaintain(spark, sf).collect().map(_.toSeq).toSeq
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val fresh = spark.newSession()
     val served = Dedup.keepMaintainFrom(fresh, sf, root).collect().map(_.toSeq).toSeq
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(served.nonEmpty && served == inSession)
   }
 
@@ -3410,7 +3410,7 @@ class OperatorsSpec extends AnyFunSuite {
     val nVecs = emb.count()
     val dim = emb.select(size(col("embedding"))).first().getInt(0)
     val rows = KMeansCodebook.centroids(spark, sf).collect()
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val byCluster = rows.groupBy(_.getAs[Long]("cluster"))
     assert(byCluster.size <= KMeansCodebook.K)
     // every cluster carries all dims with one consistent member count,
@@ -3433,7 +3433,7 @@ class OperatorsSpec extends AnyFunSuite {
     }
     assert(moved, "centroids should move off the raw init vectors")
     val again = KMeansCodebook.centroids(spark, sf).collect()
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(rows.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq, "training must be deterministic")
   }
 
@@ -3494,7 +3494,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("cluster-balanced sample: quota per cluster, ranks contiguous") {
     val rows = KMeansCodebook.clusterBalancedSample(spark, sf).collect()
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(rows.nonEmpty)
     rows.groupBy(_.getAs[Long]("cluster")).foreach { case (_, rs) =>
       assert(rs.length <= KMeansCodebook.BalancedQuota)

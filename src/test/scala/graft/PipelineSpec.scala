@@ -24,7 +24,7 @@ class PipelineSpec extends AnyFunSuite {
     // rows-only check — this test makes the downgrade loud)
     val lazySpark = SparkTestSession.spark
     assert(SparkEntry.entry(lazySpark).count() > 0, "flagship must return rows")
-    graft.operators.Dedup.retireCaches()
+    graft.operators.Kernels.retireCaches()
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing.isEmpty, s"queries without an oracle: ${missing.toSeq.sorted}")
   }

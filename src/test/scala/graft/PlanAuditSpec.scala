@@ -53,7 +53,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("ann_range_ivf: probes broadcast, candidates come from a cell equi-join") {
     val p = plan(Similarity.annRangeIvf(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(p.contains("BroadcastExchange"), "probe set must broadcast")
     // the whole point vs ann_range: candidates arrive via the trained-
     // cell equi-join, never a corpus-wide nested-loop product
@@ -63,7 +63,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("ann_ivf_pq: probe cells + ADC table broadcast, no corpus product anywhere") {
     val p = plan(ProductQuant.annIvfPq(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(p.contains("BroadcastExchange"),
       "probe cells and the ADC distance table must broadcast")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
@@ -79,7 +79,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // read — the IVF index contract, visible in the plan
     val root = ProductQuant.ensureIndexArtifact(spark, sf)
     val p = plan(ProductQuant.annIvfPqFrom(spark, sf, root))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(p.contains("PartitionFilters: [") && p.contains("cluster"),
       s"probed-cell filter must prune code partitions, not scan+filter:\n${p.take(900)}")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
@@ -96,7 +96,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // fall back to reading every directory
     val root = ProductQuant.ensureMaintainedArtifact(spark, sf)
     val p = plan(ProductQuant.annIvfPqFrom(spark, sf, root))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(p.contains("PartitionFilters: [") && p.contains("cluster"),
       s"probed-cell filter must prune the maintained code partitions:\n${p.take(900)}")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
@@ -127,7 +127,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // single merged maintained store
     val layered = served.collect().map(_.toSeq)
     val maintained = ProductQuant.annIvfPqMaintain(spark, sf).collect().map(_.toSeq)
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(layered.nonEmpty && layered.toSeq == maintained.toSeq,
       "base+delta serve must equal the merged-store serve row-for-row")
   }
@@ -148,7 +148,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // static probed-cell pruning on the artifact's code partitions,
     // equi-joins only, query-sized sides broadcast
     val p = plan(graft.operators.ProductQuant.pipelineIndex(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(p.contains("PartitionFilters: [") && p.contains("cluster"),
       s"probed-cell filter must prune the artifact's code partitions:\n${p.take(900)}")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
@@ -173,7 +173,7 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(p.contains("BroadcastExchange"),
         s"$which must broadcast the query-vocabulary side")
     }
-    Dedup.retireCaches()
+    Kernels.retireCaches()
   }
 
   test("bm25: no window anywhere; df partial-aggregates; query terms broadcast") {
@@ -234,7 +234,7 @@ class PlanAuditSpec extends AnyFunSuite {
         s"tfidf_search: the per-query cut must partial-aggregate:\n${pt.take(1500)}")
       assert(!pt.contains("Window"),
         s"tfidf_search: no window may remain anywhere:\n${pt.take(800)}")
-    } finally Dedup.retireCaches()
+    } finally Kernels.retireCaches()
   }
 
   test("tfidf_top_terms: df partial-aggregates map-side, never a term window") {
@@ -266,7 +266,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("pipeline_media_training_set: every window partitions by shard, no corpus product") {
     val p = plan(operators.Sampling.mediaTrainingSet(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     // the flagship composes keep -> sample -> pack in one plan; the
     // pack stage's prefix-sum and position windows must partition by
     // SHARD (|sample|/shards rows each) — a global window here would
@@ -286,7 +286,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("pipeline_full_training_set: shard-partitioned layout over artifact + survivor union") {
     val p = plan(operators.Sampling.fullTrainingSet(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     // the unified export's layout windows must partition by shard and
     // the media side must arrive as the published keep artifact
     assert(p.contains("windowspecdefinition(shard"),
@@ -301,7 +301,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("dedup_semantic: in-cluster pairs via equi-join, never a corpus product") {
     val p = plan(Dedup.semanticNearDup(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"cluster bucketing must make the pair join an equi-join:\n${p.take(600)}")
     // the production query reads the durable celled artifact — the
@@ -319,7 +319,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // come from a bare scan of the celled artifact; the only window is
     // the per-vector rank over its in-cell candidates
     val p = plan(Graph.mutualKnn(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(p.contains("graft-celled-idx"),
       "graph_knn must scan the celled-index store, not re-derive the split")
     assert(!p.contains("CartesianProduct"))
@@ -334,7 +334,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // claim the join-site comment in Dedup.capCells relies on.
     val nulls = operators.KMeansCodebook.lastAssignment(spark, sf)
       .filter(col("vec_id").isNull || col("cluster").isNull).count()
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(nulls == 0L,
       s"$nulls null-keyed assignment rows would silently drop in capCells' band join")
   }
@@ -623,7 +623,7 @@ class PlanAuditSpec extends AnyFunSuite {
         assert(!p.contains("SortMergeJoin"),
           s"$name must not sort-merge the array-carrying verify stream")
       }
-    } finally Dedup.retireCaches()
+    } finally Kernels.retireCaches()
   }
 
   test("bucketed dedup operators plan equi-joins, never a cartesian") {
@@ -640,7 +640,7 @@ class PlanAuditSpec extends AnyFunSuite {
         assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
           s"$name must not plan an all-pairs join:\n${p.take(600)}")
       }
-    } finally Dedup.retireCaches()
+    } finally Kernels.retireCaches()
   }
 
   test("cdc maintenance: the base table is never sort-merge-shuffled") {
@@ -817,7 +817,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("bloom incremental: anti-join stays a join; native codegen'd probe on both routes") {
     val p = plan(Dedup.incrementalBloom(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(p.contains("LeftAnti"), "exact verification must be an anti JOIN")
     assert(!p.contains("CartesianProduct"))
     // both batch routes carry the NATIVE bloom probe (negated on the
@@ -936,7 +936,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // join; only the 1-row total rides a broadcast product
     val df = operators.Corpus.docSurprisal(spark, sf)
     val p = df.queryExecution.executedPlan.toString
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     // the tokenize pass is CACHED: both consumers read the cache (every
     // FileScan in the plan string is the cache's one build plan,
     // reprinted per InMemoryRelation reference)
@@ -1247,7 +1247,7 @@ class PlanAuditSpec extends AnyFunSuite {
   test("orders_percentile_rank: two-level rank, no per-priority corpus window, one orders scan") {
     val df = Relational.ordersPercentileRank(spark, sf)
     val p = plan(df)
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     // the naive form windows over the 5-value priority key — a fifth
     // of orders in ONE task; the banded form's windows partition by
     // (priority, band) and by priority only over the band aggregate
@@ -1312,7 +1312,7 @@ class PlanAuditSpec extends AnyFunSuite {
         s"only the 1-row totals may broadcast-NLJ, got $bnlj:\n${p.take(800)}")
       assert(p.contains("partial_count"),
         s"unigram/bigram counts must partial-aggregate before their exchanges:\n${p.take(800)}")
-    } finally Dedup.retireCaches() // PMI pins its vocab-sized count frames
+    } finally Kernels.retireCaches() // PMI pins its vocab-sized count frames
   }
 
   test("kmv sketch bottom-k partial-aggregates; no per-group window sort") {
@@ -1330,7 +1330,7 @@ class PlanAuditSpec extends AnyFunSuite {
         s"per-(cluster, dim) sums must combine before the exchange:\n${p.take(800)}")
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"assignment is a map-side kernel, never a corpus x codebook join:\n${p.take(800)}")
-    } finally Dedup.retireCaches() // centroids pins the exploded base frame
+    } finally Kernels.retireCaches() // centroids pins the exploded base frame
   }
 
   test("multimodal kernels: map-only over a pruned scan, no joins at all") {
@@ -1396,7 +1396,7 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(p.contains("ObjectHashAggregate"),
         s"graft_topk must rank the serve:\n${p.take(800)}")
       assert(!p.contains("Window"), s"no rank window in the serve:\n${p.take(800)}")
-    } finally Dedup.retireCaches()
+    } finally Kernels.retireCaches()
   }
 
   test("mm_media_keep: signature passes fold map-side, thresholds broadcast, no pair joins") {
@@ -1419,7 +1419,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("mm_media_keep_maintain: CDC merge — anti-join pass-through, no pair joins, no windows") {
     val p = plan(Multimodal.mediaKeepMaintain(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     // the store's untouched groups ride an anti-join unchanged — the
     // CDC contract (the store is never shuffled beyond touched groups)
     assert(p.contains("LeftAnti"),
@@ -1434,7 +1434,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("pack_media windows by shard, never a global single-partition sort") {
     val p = plan(operators.Sampling.packMedia(spark, sf))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(p.contains("hashpartitioning(shard"),
       s"permutation/prefix-sum/position windows must partition by shard:\n${p.take(800)}")
     assert(!p.contains("SinglePartition"),
@@ -1455,6 +1455,6 @@ class PlanAuditSpec extends AnyFunSuite {
         s"the serve tail is a window over the checkpoint, not a join:\n${p.take(800)}")
       assert(p.contains("WindowGroupLimit"),
         s"the top-k cut must push the group limit below the exchange:\n${p.take(800)}")
-    } finally Dedup.retireCaches()
+    } finally Kernels.retireCaches()
   }
 }

@@ -19,7 +19,7 @@ class QualityClassifierSpec extends AnyFunSuite {
     val rows = QualityClassifier.scored(spark, sf)
       .select("label", "pred").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     val n = rows.length
     val npos = rows.count(_._1 == 1L)
     val base = math.max(npos, n - npos).toDouble / n
@@ -41,7 +41,7 @@ class QualityClassifierSpec extends AnyFunSuite {
   test("head shape: 5 finite weights, the label's own signals dominate the distractor") {
     val w = QualityClassifier.classifier(spark, sf).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(w.keySet == Set("bias", "x1_len", "x2_diversity", "x3_stop", "x4_chars"))
     assert(w.values.forall(v => !v.isNaN && !v.isInfinite))
     // x1/x3 are components of the label's threshold; x4 (char band) is
@@ -55,7 +55,7 @@ class QualityClassifierSpec extends AnyFunSuite {
   test("served twin equals the in-session scored query bit-for-bit") {
     val scored = QualityClassifier.scored(spark, sf).collect().map(_.toSeq)
     val served = QualityClassifier.served(spark, sf).collect().map(_.toSeq)
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(served.nonEmpty && scored.toSeq == served.toSeq,
       "artifact-served scores must equal in-session scores exactly")
   }
@@ -67,7 +67,7 @@ class QualityClassifierSpec extends AnyFunSuite {
     val batch = QualityClassifier.scored(spark, sf).collect().map(_.toSeq)
     val streamed = graft.streaming.DocStream.streamQualityClassifier(spark, sf)
       .collect().map(_.toSeq)
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(streamed.nonEmpty && batch.toSeq == streamed.toSeq,
       "drained stream scores must equal the batch scorer exactly")
   }
@@ -75,14 +75,14 @@ class QualityClassifierSpec extends AnyFunSuite {
   test("scored predictions are consistent with the emitted score") {
     val bad = QualityClassifier.scored(spark, sf)
       .filter((col("score") >= 0.5) =!= (col("pred") === 1L)).count()
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(bad == 0L, s"$bad rows with pred inconsistent with score")
   }
 
   test("scoring plan is map-only: no join, no window, no corpus shuffle before the sort") {
     val p = QualityClassifier.scored(spark, sf)
       .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     // the head rides the task closure: the only wide op is the output
     // ordering — at 100 TB the scorer is embarrassingly parallel
     assert(!p.contains("Join"), s"scoring must not join:\n${p.take(800)}")

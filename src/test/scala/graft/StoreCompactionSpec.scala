@@ -95,7 +95,7 @@ class StoreCompactionSpec extends AnyFunSuite {
     assert(rowsAfter == rowsBefore, "compaction must preserve the exact code rows")
     val served = ProductQuant.annIvfPqMaintain(spark, sf).collect().map(_.toSeq)
     val servedC = ProductQuant.annIvfPqCompact(spark, sf).collect().map(_.toSeq)
-    Dedup.retireCaches()
+    Kernels.retireCaches()
     assert(servedC.nonEmpty && servedC.toSeq == served.toSeq,
       "the compacted index must serve the maintained answer bit-for-bit")
   }

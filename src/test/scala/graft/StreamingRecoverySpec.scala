@@ -290,29 +290,26 @@ class StreamingRecoverySpec extends AnyFunSuite {
   }
 
   test("state-partition sizing follows key cardinality and never changes results") {
-    import graft.streaming.EventStream
+    import graft.streaming.{Drain, EventStream}
     // the sizing arithmetic: one store per TargetKeysPerStore keys,
     // clamped to [1, the session's batch parallelism] (4 in this suite)
-    assert(EventStream.statePartitionsFor(spark, 1L) == 1)
-    assert(EventStream.statePartitionsFor(spark, EventStream.TargetKeysPerStore) == 1)
-    assert(EventStream.statePartitionsFor(spark, 2 * EventStream.TargetKeysPerStore) == 2)
+    assert(Drain.statePartitionsFor(spark, 1L) == 1)
+    assert(Drain.statePartitionsFor(spark, Drain.TargetKeysPerStore) == 1)
+    assert(Drain.statePartitionsFor(spark, 2 * Drain.TargetKeysPerStore) == 2)
     val batchDefault = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    assert(EventStream.statePartitionsFor(spark, 1000000L) == batchDefault,
+    assert(Drain.statePartitionsFor(spark, 1000000L) == batchDefault,
       "state sizing must not exceed the session's compute parallelism")
     // result invariance across sizings: the SAME stateful drain at 1
     // store and at the clamp must emit identical aggregates — the
     // property that makes the partition count a pure perf knob
     def drain(name: String, expectedKeys: Long): Set[(Long, String, Long)] =
-      EventStream.withStatePartitions(spark, expectedKeys) {
+      Drain.withStatePartitions(spark, expectedKeys) {
         assert(spark.conf.get("spark.sql.shuffle.partitions").toInt ==
-          EventStream.statePartitionsFor(spark, expectedKeys))
+          Drain.statePartitionsFor(spark, expectedKeys))
         val agg = EventStream.readEventsStream(spark, SparkTestSession.Sf)
           .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
           .agg(count(lit(1)).as("n"))
-        val q = agg.writeStream.outputMode(OutputMode.Complete())
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-        spark.table(name).collect()
+        Drain.toMemory(agg, OutputMode.Complete(), name).collect()
           .map(r => (r.getAs[java.sql.Timestamp]("hour").getTime,
             r.getAs[String]("event_type"), r.getAs[Long]("n"))).toSet
       }
@@ -323,7 +320,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
   }
 
   test("rocksdb state store drains the same results as the in-memory provider") {
-    import graft.streaming.EventStream
+    import graft.streaming.{Drain, EventStream}
     // the 100 TB posture for streaming state: the in-memory
     // HDFS-backed provider holds every store's map on-heap — the
     // 128 GiB-VM shape; at production state sizes the spillable
@@ -342,10 +339,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"), approx_count_distinct("user_id").as("u"))
-        val q = agg.writeStream.outputMode(OutputMode.Complete())
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-        spark.table(name).collect()
+        Drain.toMemory(agg, OutputMode.Complete(), name).collect()
           .map(r => (r.getAs[Row]("window").getAs[java.sql.Timestamp]("start").getTime,
             r.getAs[String]("event_type"), r.getAs[Long]("n"))).toSet
       } finally saved match {
@@ -357,5 +351,34 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val rdb = drain("state_provider_rocks", Some(rocks))
     assert(mem.nonEmpty && mem == rdb,
       "the state-store provider must be a pure storage swap: identical drained rows")
+  }
+
+  test("a drain whose batch throws fails loudly, stops its stream and restores the conf") {
+    import graft.streaming.Drain
+    val in = tmpDir("graft-drain-fail").resolve("t")
+    spark.range(4).toDF("k").write.parquet(in.toString)
+    val src = spark.readStream.schema("k BIGINT").parquet(in.toString)
+    val boom = udf { (k: Long) =>
+      if (k >= 0L) throw new IllegalStateException("injected batch failure")
+      k
+    }
+    def failsCleanly(label: String)(drain: => Unit): Unit = {
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      val e = intercept[Exception](Drain.withStatePartitions(spark, 1L)(drain))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("injected batch failure")),
+        s"$label: the batch's own failure must surface, got $e")
+      assert(spark.streams.active.isEmpty, s"$label: the failed stream must be stopped")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == prev,
+        s"$label: the state sizing must be restored")
+    }
+    failsCleanly("toMemory") {
+      Drain.toMemory(src.select(boom(col("k")).as("k")), OutputMode.Append(), "drain_fail_out")
+    }
+    failsCleanly("foreachBatch") {
+      Drain.foreachBatch(src) { (_, _) =>
+        throw new IllegalStateException("injected batch failure")
+      }
+    }
   }
 }
